@@ -28,6 +28,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from incubator_druid_spark.catalog import Catalog, TIME_COLUMN
+from incubator_druid_spark.plans import cache
 from incubator_druid_spark.plans.translator import translate
 
 
@@ -156,7 +157,17 @@ def native_query(body: dict, spark: SparkSession, catalog: Catalog) -> list[dict
     """POST /druid/v2/ — returns Druid-shaped result envelopes per query type:
     timeseries → [{timestamp, result:{...}}], topN → [{timestamp, result:[...]}],
     groupBy → [{version, timestamp, event:{...}}], scan → [{columns, events}],
-    others → plain row objects."""
+    others → plain row objects.  Under context.useCache/populateCache the
+    finished response is served from / stored in the result cache
+    (plans/cache.py): a hit neither translates nor runs a Spark job."""
+    hit = cache.lookup(body, catalog)
+    if hit is not None:
+        return hit
+    return cache.populate(body, catalog, _native_response(body, spark, catalog))
+
+
+def _native_response(body: dict, spark: SparkSession,
+                     catalog: Catalog) -> list[dict]:
     qt = body["queryType"]
     df = translate(body, spark, catalog)
     rows = _rows_timed(df, (body.get("context") or {}).get("timeout"))

@@ -303,6 +303,7 @@ class Catalog:
     # reference: query/LookupDataSource.java + query/expression/LookupExprMacro.java
     def register_lookup(self, name: str, mapping: dict[str, str]) -> None:
         self._lookups[name] = dict(mapping)
+        (getattr(self, "_parent", None) or self)._version += 1
 
     def lookup_map(self, name: str) -> dict[str, str]:
         if name not in self._lookups:

@@ -1,14 +1,21 @@
-"""Whole-result query cache + scheduler hints.
+"""Result-level query cache + scheduler hints.
 
-Reference: Druid caches per-segment and whole results keyed by the query's
-cache key (query/CacheStrategy.java; broker cache in
-server/.../client/CachingClusteredClient.java, Caffeine-backed
-client/cache/CaffeineCache.java), controlled per-query by context flags
-useCache / populateCache (query/QueryContexts.java).  Here the analogue is a
-bounded registry of PERSISTED DataFrames keyed by the canonicalized query
-JSON: populateCache persists the plan's result (memory-and-disk, spilling
-like Tungsten does), useCache returns the persisted frame so repeated
-dashboards hit executor block storage instead of re-scanning parquet.
+Reference: Druid's broker result cache (ResultLevelCachingQueryRunner,
+Caffeine-backed client/cache/CaffeineCache.java) stores FINISHED result rows
+under the query's cache key (query/CacheStrategy.java), with the set of
+segments the query read folded into the entry, so an append invalidates it;
+it is controlled per query by the context flags useCache / populateCache
+(query/QueryContexts.java).  Here the analogue is a bounded LRU of finished
+``api.native_query`` responses: a hit runs no Spark job and holds no Spark
+storage.  Entries are stored pickled, so every hit hands out its own copy
+and a caller mutating a response cannot alter the cached one.
+
+Freshness comes from the key: ``cache_key(query)`` (which carries the
+registered-lookup version) plus ``Catalog.version()`` — the catalog's
+identity and mutation count, bumped by every ``register`` (and so by every
+``sources.ingest`` write).  Writes made outside the engine's catalog (files
+dropped under a registered path without re-registering it) are not seen,
+the same as for registered views.
 
 Query prioritization (server/.../QueryScheduler.java laning,
 QueryContexts.getPriority) maps to Spark fair-scheduler pools: context.lane
@@ -20,15 +27,16 @@ one-query-per-request execution model.
 from __future__ import annotations
 
 import json
+import pickle
 import threading
 from collections import OrderedDict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 _MAX_ENTRIES = 64
-_CACHE: OrderedDict[str, DataFrame] = OrderedDict()
+_CACHE: OrderedDict[str, bytes] = OrderedDict()
 # ThreadingHTTPServer serves concurrent requests: the OrderedDict's
-# move_to_end/pop/popitem must not interleave
+# move_to_end/popitem must not interleave
 _LOCK = threading.Lock()
 
 
@@ -52,44 +60,41 @@ def cache_key(query: dict) -> str:
         f"#lkv{lookup_version()}"
 
 
-def lookup(query: dict) -> DataFrame | None:
-    ctx = query.get("context") or {}
-    if not ctx.get("useCache"):
+def _entry_key(query: dict, catalog) -> str:
+    return f"{cache_key(query)}#cat{catalog.version()}"
+
+
+def lookup(query: dict, catalog) -> list | None:
+    """The cached response for ``query`` over ``catalog``'s current
+    version, as a fresh copy; None on a miss or without context.useCache."""
+    if not (query.get("context") or {}).get("useCache"):
         return None
-    key = cache_key(query)
+    key = _entry_key(query, catalog)
     with _LOCK:
-        df = _CACHE.get(key)
-        if df is not None:
-            _CACHE.move_to_end(key)
-    return df
+        blob = _CACHE.get(key)
+        if blob is None:
+            return None
+        _CACHE.move_to_end(key)
+    return pickle.loads(blob)
 
 
-def populate(query: dict, df: DataFrame) -> DataFrame:
-    ctx = query.get("context") or {}
-    if not ctx.get("populateCache"):
-        return df
-    key = cache_key(query)
-    df = df.persist()
-    evicted = []
+def populate(query: dict, catalog, response: list) -> list:
+    """Store ``response`` under context.populateCache; returns it as is."""
+    if not (query.get("context") or {}).get("populateCache"):
+        return response
+    key = _entry_key(query, catalog)
+    blob = pickle.dumps(response, protocol=pickle.HIGHEST_PROTOCOL)
     with _LOCK:
-        old = _CACHE.pop(key, None)
-        if old is not None:
-            evicted.append(old)
-        _CACHE[key] = df
+        _CACHE[key] = blob
+        _CACHE.move_to_end(key)
         while len(_CACHE) > _MAX_ENTRIES:
-            _, e = _CACHE.popitem(last=False)
-            evicted.append(e)
-    for e in evicted:  # unpersist outside the lock (py4j roundtrip)
-        e.unpersist()
-    return df
+            _CACHE.popitem(last=False)
+    return response
 
 
 def clear() -> None:
     with _LOCK:
-        entries = list(_CACHE.values())
         _CACHE.clear()
-    for df in entries:
-        df.unpersist()
 
 
 def apply_scheduling(query: dict, spark: SparkSession) -> None:

@@ -262,9 +262,6 @@ def translate(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     clear_lookup_joins()  # drop leftovers from any abandoned prior compile
     from incubator_druid_spark.plans import cache
     cache.apply_scheduling(query, spark)
-    hit = cache.lookup(query)
-    if hit is not None:
-        return hit
     out = dispatch[qt](query, spark, catalog)
     # helper aggregates synthesized by rewrite_sketch_query (theta/HLL set-op
     # rewrites) are internal — Druid never surfaces them in the result row
@@ -272,4 +269,4 @@ def translate(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
                if c.startswith("__theta_union_") or c.startswith("__hll_union_")]
     if helpers:
         out = out.drop(*helpers)
-    return cache.populate(query, out)
+    return out

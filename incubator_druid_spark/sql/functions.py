@@ -1478,96 +1478,14 @@ def _rewrite_date_trunc(sql: str) -> str:
         repl, sql)
 
 
-_ARRAY_COLS_CACHE: dict[int, frozenset] = {}
-
-
-def _catalog_array_cols(catalog, sql: str | None = None) -> frozenset:
-    """Array-typed column names for the tables ``sql`` references (all
-    tables when sql is None) — lets the string-level ARRAY_CONTAINS/
-    ARRAY_OVERLAP rewrites dispatch non-literal second arguments by TYPE
-    like Druid's runtime does.  Scoping to referenced tables keeps a
-    scalar column in the queried table from picking up array rewrites
-    because an UNRELATED table has an array column of the same name.
-    The per-table scan is memoized per catalog instance (schemas are
-    immutable once registered)."""
-    if catalog is None:
-        return frozenset()
-    key = id(catalog)
-    cached = _ARRAY_COLS_CACHE.get(key)
-    names = catalog.names()
-    if cached is not None and cached[0] == names:
-        per_table = cached[1]
-    else:
-        from pyspark.sql import types as _T
-        per_table = {}
-        for t in names:
-            try:
-                per_table[t] = frozenset(
-                    f.name for f in catalog.schema(t).fields
-                    if isinstance(f.dataType, _T.ArrayType))
-            except Exception:  # pragma: no cover — unreadable source
-                per_table[t] = frozenset()
-        _ARRAY_COLS_CACHE[key] = (names, per_table)
-    if sql is not None:
-        _nonlit = []
-        _outside_literals(sql, lambda s: (_nonlit.append(s), s)[1])
-        nonlit_sql = " ".join(_nonlit)
-        return frozenset().union(*(
-            cols for t, cols in per_table.items()
-            if re.search(rf"(?i)\b{re.escape(t)}\b", nonlit_sql)),
-            frozenset())
-    return frozenset().union(*per_table.values(), frozenset())
-
-
 _NON_ANSI_CLONES: "weakref.WeakKeyDictionary" = None
 
 
 # Temp views the ENGINE itself registers (lookup tables, SQL views,
-# INFORMATION_SCHEMA / sys emulation) — excluded from the host-state token
-# so the engine's own registrations can never churn the clone cache.
+# INFORMATION_SCHEMA / sys emulation) — excluded from the clone's staleness
+# checks so the engine's own registrations can never churn the clone cache.
 _ENGINE_VIEW_RE = re.compile(
     r"(?i)^(?:lookup_|view_|__lookup_|information_schema_|sys_)")
-
-
-def _host_state_token(spark: SparkSession):
-    """Staleness token for the host session's state the clone copies at
-    cloneSession() time: temp-view names + the IDENTITY of each view's
-    stored catalog entry (createOrReplaceTempView always installs a fresh
-    ``TemporaryViewRelation`` object, so an identity change is a strict
-    superset of a semantic change) and the session timezone.  O(#views)
-    py4j lookups with NO plan analysis per call — the previous
-    semanticHash round-trip re-analyzed every host temp view on every
-    ``druid_sql`` call (~250 ms at 6 views; r7 VERDICT crack #2).
-
-    The timezone read uses the no-default form: ``conf.get(key, "")``
-    VALIDATES the ``''`` default and throws ``INVALID_CONF_VALUE`` on a
-    vanilla PySpark-4 host (r7 VERDICT crack #1); the key always resolves
-    (falls back to the JVM default zone), so no default is needed.
-
-    Catalog datasources are re-registered per call and don't need to be
-    in the token."""
-    views = []
-    try:
-        jcat = spark._jsparkSession.sessionState().catalog()
-        jvm = spark.sparkContext._jvm
-        idents = jcat.listLocalTempViews("*")
-        for i in range(idents.size()):
-            name = idents.apply(i).table()
-            if _ENGINE_VIEW_RE.match(name):
-                continue
-            raw = jcat.getRawTempView(name)
-            h = (jvm.java.lang.System.identityHashCode(raw.get())
-                 if raw.isDefined() else 0)
-            views.append((name, h))
-    except Exception:  # pragma: no cover — unexpected catalog shape
-        try:
-            for t in spark.catalog.listTables():
-                if t.isTemporary and not _ENGINE_VIEW_RE.match(t.name):
-                    views.append((t.name, 0))
-        except Exception:
-            pass
-    return tuple(sorted(views)) \
-        + (spark.conf.get("spark.sql.session.timeZone"),)
 
 
 def _host_view_names(spark: SparkSession) -> list[str]:
@@ -1846,7 +1764,39 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
     sql = _rewrite_time_tz(sql)
     sql = _rewrite_time_periods(sql)
     sql = _rewrite_regexp_extract(sql)
-    sql = _rewrite_array_functions(sql, _catalog_array_cols(catalog, sql))
+
+    # Column types of the tables the query references, read from
+    # catalog.schema() (refreshed on every re-register).  Only referenced
+    # tables: a scalar string column in table A sharing a name with an
+    # array column in unreferenced table B must not pick up array rewrites.
+    ts_cols: set[str] = {"__time"}
+    array_cols: set[str] = set()
+    mvd_cols: set[str] = set()
+    bin_cols: set[str] = set()
+    if catalog is not None:
+        from pyspark.sql import types as _T
+        _nonlit = []
+        _outside_literals(sql, lambda s: (_nonlit.append(s), s)[1])
+        _nonlit_sql = " ".join(_nonlit)
+        for _t in catalog.names():
+            if not re.search(rf"(?i)\b{re.escape(_t)}\b", _nonlit_sql):
+                continue
+            try:
+                for _f in catalog.schema(_t).fields:
+                    if isinstance(_f.dataType, _T.ArrayType):
+                        array_cols.add(_f.name)
+                        if isinstance(_f.dataType.elementType,
+                                      _T.StringType):
+                            mvd_cols.add(_f.name)
+                    elif isinstance(_f.dataType, _T.BinaryType):
+                        bin_cols.add(_f.name)
+                    elif isinstance(_f.dataType, _T.TimestampType):
+                        ts_cols.add(_f.name)
+            except Exception:  # pragma: no cover - unreadable table
+                pass
+    # ARRAY_CONTAINS/ARRAY_OVERLAP dispatch non-literal second arguments
+    # by TYPE, like Druid's runtime does
+    sql = _rewrite_array_functions(sql, frozenset(array_cols))
 
     # MVD-aware COUNT(DISTINCT col): Calcite exposes an MVD as VARCHAR and
     # plans a cardinality agg over its VALUES (CalciteQueryTest
@@ -1854,33 +1804,7 @@ def druid_sql(spark: SparkSession, sql: str, catalog: Catalog | None = None,
     # bare Spark count-distinct over the array column would count distinct
     # ARRAYS.  collect_set bounds state by distinct arrays, then
     # flatten+distinct counts the value universe; null elements drop.
-    ts_cols: set[str] = {"__time"}
     if catalog is not None:
-        from pyspark.sql import types as _T
-        mvd_cols: set[str] = set()
-        # Only tables the query references: a scalar string column in
-        # table A sharing a name with an MVD column in unreferenced table
-        # B must not pick up array rewrites.
-        _nonlit = []
-        _outside_literals(sql, lambda s: (_nonlit.append(s), s)[1])
-        _nonlit_sql = " ".join(_nonlit)
-        bin_cols: set[str] = set()
-        for _t in catalog.names():
-            if not re.search(rf"(?i)\b{re.escape(_t)}\b", _nonlit_sql):
-                continue
-            try:
-                for _f in catalog.schema(_t).fields:
-                    if (isinstance(_f.dataType, _T.ArrayType)
-                            and isinstance(_f.dataType.elementType,
-                                           _T.StringType)):
-                        mvd_cols.add(_f.name)
-                    elif isinstance(_f.dataType, _T.BinaryType):
-                        bin_cols.add(_f.name)
-                    elif isinstance(_f.dataType, _T.TimestampType):
-                        ts_cols.add(_f.name)
-            except Exception:  # pragma: no cover - unreadable table
-                pass
-
         def _mvd_filter_form(s, fname):
             """COUNT(DISTINCT <mvd>) FILTER (WHERE p) — the plain rewrite
             replaces the call with a non-aggregate expression that a

@@ -165,32 +165,191 @@ def test_timewarp_shifts_intervals(spark, foo_catalog):
     assert s.startswith("1970-01-0") and s < e
 
 
+def spark_jobs(spark, fn):
+    """(fn(), the number of Spark jobs fn submitted) — counted under a
+    job group set on the calling thread."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_result_cache_and_scheduling_context(spark, catalog):
-    """useCache/populateCache whole-result cache (CacheStrategy/
-    CachingClusteredClient analogue) + lane/priority → scheduler pool."""
-    from incubator_druid_spark import translate
+    """useCache/populateCache result-level cache (ResultLevelCachingQueryRunner
+    analogue) + lane/priority → scheduler pool."""
+    from incubator_druid_spark.api import native_query
     from incubator_druid_spark.plans import cache as qcache
 
     qcache.clear()
     q = {"queryType": "timeseries", "dataSource": "events", "granularity": "all",
          "aggregations": [{"type": "count", "name": "cnt"}],
          "context": {"useCache": True, "populateCache": True, "priority": 5}}
-    first = translate(q, spark, catalog)
-    n1 = first.first()["cnt"]
-    assert first.storageLevel.useMemory  # populated → persisted
+    first, jobs = spark_jobs(spark, lambda: native_query(q, spark, catalog))
+    assert jobs > 0 and first[0]["result"]["cnt"] > 0
     assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") == "high"
 
-    again = translate(dict(q, context={"useCache": True, "priority": -1}), spark, catalog)
-    assert again is first                # cache hit returns the persisted frame
-    assert again.first()["cnt"] == n1
-    assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") == "low"
+    # the same query (cache directives and priority aside) is a hit: an
+    # equal response, no Spark job
+    again, jobs = spark_jobs(spark, lambda: native_query(
+        dict(q, context={"useCache": True}), spark, catalog))
+    assert again == first and jobs == 0
 
-    # different query (same shape, different agg name) → miss
-    miss = translate({**q, "aggregations": [{"type": "count", "name": "c2"}],
-                      "context": {"useCache": True}}, spark, catalog)
-    assert miss is not first
+    # different query (same shape, different agg name) → miss, translated
+    # under the low pool
+    miss, jobs = spark_jobs(spark, lambda: native_query(
+        {**q, "aggregations": [{"type": "count", "name": "c2"}],
+         "context": {"useCache": True, "priority": -1}}, spark, catalog))
+    assert jobs > 0
+    assert miss[0]["result"] == {"c2": first[0]["result"]["cnt"]}
+    assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") == "low"
     qcache.clear()
-    assert not first.storageLevel.useMemory or True  # unpersisted on clear
+
+
+def _cached(q: dict) -> dict:
+    return {**q, "context": {"useCache": True, "populateCache": True}}
+
+
+def test_result_cache_fresh_after_ingest_append(spark, tmp_path):
+    """An append through sources.ingest re-registers the datasource, which
+    moves the catalog version in the cache key: the cached query re-run
+    after it answers over the appended rows."""
+    from incubator_druid_spark.api import native_query
+    from incubator_druid_spark.catalog import Catalog
+    from incubator_druid_spark.sources.ingest import ingest
+
+    cat = Catalog(spark)
+
+    def append(fname, line):
+        (tmp_path / fname).write_text(line)
+        ingest(spark, {
+            "dataSchema": {
+                "dataSource": "appended",
+                "timestampSpec": {"column": "d", "format": "auto"},
+                "dimensionsSpec": {"dimensions": ["site"]},
+                "metricsSpec": [{"type": "longSum", "name": "v_sum",
+                                 "fieldName": "v"}],
+                "granularitySpec": {"segmentGranularity": "day",
+                                    "queryGranularity": "day",
+                                    "rollup": True}},
+            "ioConfig": {"inputSource": {"type": "local",
+                                         "files": [str(tmp_path / fname)]},
+                         "inputFormat": {"type": "csv",
+                                         "columns": ["d", "site", "v"]},
+                         "appendToExisting": True}},
+            cat, str(tmp_path / "seg"))
+
+    q = _cached({"queryType": "timeseries", "dataSource": "appended",
+                 "granularity": "all",
+                 "intervals": ["2024-01-01T00:00:00Z/2024-01-02T00:00:00Z"],
+                 "aggregations": [{"type": "longSum", "name": "v",
+                                   "fieldName": "v_sum"}]})
+    append("a.csv", "2024-01-01,x,1\n")
+    assert native_query(q, spark, cat)[0]["result"]["v"] == 1
+    assert native_query(q, spark, cat)[0]["result"]["v"] == 1  # a hit
+    append("b.csv", "2024-01-01,y,2\n")
+    assert native_query(q, spark, cat)[0]["result"]["v"] == 3
+
+
+def test_result_cache_never_shared_between_catalogs(spark, tmp_path):
+    """Two catalogs registering one name over different data never serve
+    each other's entries: the catalog identity is part of the key."""
+    from incubator_druid_spark.api import native_query
+    from incubator_druid_spark.catalog import Catalog
+
+    cats = []
+    for n in (3, 5):
+        path = str(tmp_path / f"t{n}")
+        spark.range(n).selectExpr("TIMESTAMP '2024-01-01' AS __time", "id") \
+            .write.parquet(path)
+        cat = Catalog(spark)
+        cat.register("t", path)
+        cats.append(cat)
+    q = _cached({"queryType": "timeseries", "dataSource": "t",
+                 "granularity": "all",
+                 "aggregations": [{"type": "count", "name": "rows"}]})
+    for _ in range(2):
+        assert [native_query(q, spark, c)[0]["result"]["rows"]
+                for c in cats] == [3, 5]
+
+
+def test_result_cache_hit_is_a_copy(spark, foo_catalog):
+    """Mutating a returned response — the one that populated the cache or
+    one served from it — never alters what the next hit returns."""
+    import copy
+
+    from incubator_druid_spark.api import native_query
+    q = _cached({"queryType": "groupBy", "dataSource": "foo",
+                 "granularity": "all", "dimensions": ["dim1"],
+                 "aggregations": [{"type": "count", "name": "cnt"}]})
+    first = native_query(q, spark, foo_catalog)
+    expected = copy.deepcopy(first)
+    first[0]["event"]["cnt"] = -1
+    hit, jobs = spark_jobs(spark, lambda: native_query(q, spark, foo_catalog))
+    assert hit == expected and jobs == 0
+    hit[0]["event"].clear()
+    hit.pop()
+    assert native_query(q, spark, foo_catalog) == expected
+
+
+def test_result_cache_follows_catalog_lookup_reregister(spark):
+    """A lookup datasource re-registered on the catalog moves its version:
+    the cached scan over it answers from the new mapping."""
+    from incubator_druid_spark.api import native_query
+    from incubator_druid_spark.catalog import Catalog
+
+    cat = Catalog(spark)
+    q = _cached({"queryType": "scan",
+                 "dataSource": {"type": "lookup", "lookup": "cache_lk"},
+                 "columns": ["k", "v"]})
+    cat.register_lookup("cache_lk", {"a": "1"})
+    assert native_query(q, spark, cat)[0]["events"] == [{"k": "a", "v": "1"}]
+    cat.register_lookup("cache_lk", {"a": "2"})
+    assert native_query(q, spark, cat)[0]["events"] == [{"k": "a", "v": "2"}]
+
+
+def test_result_cache_concurrent_populate_lookup():
+    """Threads populating and reading overlapping keys (more threads than
+    cores, short switch interval): every hit is the response stored under
+    its own key, and the cache never grows past its bound."""
+    import sys
+    import threading
+
+    from incubator_druid_spark.plans import cache as qcache
+
+    class OneVersion:  # the cache reads nothing of a catalog but this
+        def version(self):
+            return (0, 0)
+
+    cat, wrong = OneVersion(), []
+
+    def work(t):
+        for i in range(300):
+            name = f"ds{(t * 7 + i) % 100}"
+            q = _cached({"queryType": "scan", "dataSource": name})
+            hit = qcache.lookup(q, cat)
+            if hit is not None and hit != [name]:
+                wrong.append(hit)
+            qcache.populate(q, cat, [name])
+
+    qcache.clear()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not wrong and len(qcache._CACHE) <= qcache._MAX_ENTRIES
+    qcache.clear()
 
 
 def test_scan_compacted_list_format(spark, foo_catalog):

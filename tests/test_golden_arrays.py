@@ -259,3 +259,24 @@ def test_array_agg_to_string_distinct(spark, foo_catalog):
         SELECT ARRAY_TO_STRING(ARRAY_AGG(DISTINCT dim1), ',') AS s
         FROM foo WHERE dim1 is not null""").first()
     assert sorted(r["s"].split(",")) == ["", "1", "10.1", "2", "abc", "def"]
+
+
+def test_array_dispatch_follows_reregistered_column_type(spark, tmp_path):
+    """ARRAY_CONTAINS/ARRAY_OVERLAP dispatch a column second argument by
+    its type as read from the catalog at query time: after the table is
+    re-registered with that column changed from string to array, the
+    array (contains-all / overlap) form applies."""
+    from incubator_druid_spark.catalog import Catalog
+
+    cat = Catalog(spark)
+    sql = ("SELECT ARRAY_CONTAINS(a, b) AS c, ARRAY_OVERLAP(a, b) AS o "
+         "FROM druid.t")
+    spark.createDataFrame([(["x", "y"], "x")], "a array<string>, b string") \
+        .write.parquet(str(tmp_path / "v1"))
+    cat.register("t", str(tmp_path / "v1"))
+    assert rows(druid_sql(spark, sql, cat)) == [(True, True)]
+    spark.createDataFrame([(["x", "y"], ["x", "z"])],
+                          "a array<string>, b array<string>") \
+        .write.parquet(str(tmp_path / "v2"))
+    cat.register("t", str(tmp_path / "v2"))
+    assert rows(druid_sql(spark, sql, cat)) == [(False, True)]
