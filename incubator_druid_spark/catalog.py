@@ -12,10 +12,17 @@ processing/.../segment/column/ColumnHolder.java TIME_COLUMN_NAME).  For tables
 whose natural time column has another name (e.g. ``events.ts``) the catalog
 aliases it at load; tables with no time column get no ``__time`` and time-scoped
 queries on them fail loudly.
+
+``Catalog.timeline`` is the one reader of a table's segment layout: the
+``__bucket=`` partition listing, the ``_druid_meta.json`` ingest sidecar
+(written by sources/ingest) and the ``__time`` extent from parquet footers —
+read once per table version, the analogue of the broker's per-datasource
+segment timeline (CachingClusteredClient).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass, field
 
@@ -69,6 +76,9 @@ class Catalog:
         # Managed (session-catalog) tables stay uncached: spark.table must
         # re-bind after a saveAsTable overwrite.
         self._df_cache: dict[str, DataFrame] = {}
+        # name -> ((path, path token), Timeline); session views share the
+        # parent's (a timeline holds no session-bound state)
+        self._timelines: dict[str, tuple] = {}
 
     def version(self) -> tuple[int, int]:
         """(identity, mutation-count) — changes whenever datasources do."""
@@ -130,11 +140,12 @@ class Catalog:
                 self.register(t, p, time_column=_DEFAULT_TIME_COLUMNS.get(t))
         return self
 
-    def register_managed(self, name: str) -> None:
+    def register_managed(self, name: str, path: str) -> None:
         """Datasource backed by a session-catalog table (saveAsTable) — the
         path for bucketed layouts, whose bucketing metadata only survives
-        through spark.table()."""
-        self._specs[name] = DatasourceSpec(name, path="", fmt="managed")
+        through spark.table().  ``path`` is the table's location: reads
+        still go through spark.table, the timeline lists it."""
+        self._specs[name] = DatasourceSpec(name, path=path, fmt="managed")
         self._invalidate(name)
 
     def table(self, name: str) -> DataFrame:
@@ -186,11 +197,8 @@ class Catalog:
         by name with missing columns null.  Scale shape: one scan per schema
         EPOCH (a handful in real evolution histories), not per file."""
         from pyspark.sql import types as T
-        files: list[str] = []
-        for root, _dirs, fns in os.walk(spec.path):
-            for fn in fns:
-                if not fn.startswith(("_", ".")) and not fn.endswith(".crc"):
-                    files.append(os.path.join(root, fn))
+        tl = self.timeline(spec.name)
+        files = list(tl.files) if tl is not None else []
         opts = {k: v for k, v in spec.options.items()
                 if k != "schemaEvolution"}
 
@@ -211,11 +219,11 @@ class Catalog:
         resolved: dict[str, T.StructType] = {}
         if spec.fmt == "parquet":
             import pyarrow.parquet as pq
-            for p in sorted(files):
+            for p in files:
                 key = pq.read_schema(p).to_string()
                 groups.setdefault(key, []).append(p)
         else:
-            for p in sorted(files):
+            for p in files:
                 sch = read(p).schema
                 key = sch.json()
                 groups.setdefault(key, []).append(p)
@@ -284,6 +292,22 @@ class Catalog:
             pass
         return (st.st_mtime_ns, success, n_children, child_mtime)
 
+    def timeline(self, name: str | None) -> "Timeline | None":
+        """Segment timeline of a file-backed datasource, read once per
+        table version: memoized under the path token ``table()`` uses, so
+        re-registration, ingest appends and external writes refresh it.
+        None for unknown names and for remote or vanished paths."""
+        spec = self._specs.get(name)
+        token = self._path_token(spec.path) if spec and spec.path else None
+        if token is None:
+            return None
+        memo = (getattr(self, "_parent", None) or self)._timelines
+        key = (spec.path, token)
+        hit = memo.get(name)
+        if hit is None or hit[0] != key:
+            hit = memo[name] = (key, Timeline(spec.path))
+        return hit[1]
+
     def schema(self, name: str):
         """Cached schema of a datasource — metadata-only callers (SQL
         rewriters scanning for MVD columns) must not pay a reader-resolution
@@ -325,6 +349,111 @@ class Catalog:
                 return _lookup_frame(self.spark, name)
         m = self.lookup_map(name)
         return self.spark.createDataFrame(list(m.items()), schema="k string, v string")
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing filter (InMemoryFileIndex.shouldFilterOutPathName):
+    ``_``-names other than partition directories, dot-files (``.crc``
+    checksums) and in-flight copies hold no table data."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+@dataclass(frozen=True)
+class Segment:
+    """One time chunk of a table: a ``__bucket=`` partition directory, or
+    the whole table when it has none (``bucket`` "", ``start`` None)."""
+    bucket: str              # yyyy-MM-dd'T'HH of the chunk start
+    start: int | None        # the same instant in epoch millis
+    files: tuple[str, ...]
+    size: int                # data-file bytes
+
+
+class Timeline:
+    """A table version's segment layout, listed once: its segments, its
+    data files, the ingest sidecar (``meta``, None without one) and, on
+    first use, the ``__time`` extent."""
+
+    def __init__(self, path: str):
+        import datetime
+        import json
+        groups: dict[str, list[str]] = {"": [path]} if os.path.isfile(
+            path) else {}
+        for root, dirs, fns in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not _hidden(d))
+            top = os.path.relpath(root, path).split(os.sep, 1)[0]
+            bucket = top[len("__bucket="):] if top.startswith(
+                "__bucket=") else ""
+            for fn in sorted(fns):
+                if not _hidden(fn):
+                    groups.setdefault(bucket, []).append(
+                        os.path.join(root, fn))
+        segs = []
+        for bucket, files in sorted((groups or {"": []}).items()):
+            try:
+                start = int(datetime.datetime.strptime(
+                    bucket, "%Y-%m-%dT%H").replace(
+                        tzinfo=datetime.timezone.utc).timestamp() * 1000)
+            except ValueError:
+                start = None
+            segs.append(Segment(bucket, start, tuple(files),
+                                sum(os.path.getsize(f) for f in files)))
+        self.segments: tuple[Segment, ...] = tuple(segs)
+        self.files = tuple(sorted(f for sg in segs for f in sg.files))
+        try:
+            with open(os.path.join(path, "_druid_meta.json")) as fh:
+                self.meta: dict | None = json.load(fh)
+        except (OSError, ValueError):
+            self.meta = None
+
+    @functools.cached_property
+    def extent(self) -> tuple[int, int] | None:
+        """[min, max] of ``__time`` in epoch millis from parquet footer
+        row-group statistics — zero data read, the analogue of a segment
+        descriptor's interval.  None for non-parquet files, more than 4096
+        files, or a missing ``__time`` column or statistics."""
+        import datetime
+        import pyarrow.parquet as pq
+        if not self.files or len(self.files) > 4096:
+            return None
+        utc = datetime.timezone.utc
+        mn = mx = None
+        for path in self.files:
+            try:
+                md = pq.ParquetFile(path).metadata
+            except (OSError, ValueError):  # not parquet (ArrowInvalid)
+                return None
+            idx = next((i for i in range(md.num_columns)
+                        if md.schema.column(i).name == TIME_COLUMN), None)
+            if idx is None:
+                return None
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(idx).statistics
+                if st is None or not st.has_min_max:
+                    return None
+                lo, hi = st.min, st.max
+                if not isinstance(lo, datetime.datetime):
+                    return None  # e.g. raw TIMESTAMP(NANOS)-as-long storage
+                lo = lo.replace(tzinfo=lo.tzinfo or utc).timestamp() * 1000
+                hi = hi.replace(tzinfo=hi.tzinfo or utc).timestamp() * 1000
+                mn = lo if mn is None else min(mn, lo)
+                mx = hi if mx is None else max(mx, hi)
+        return None if mn is None else (int(mn), int(mx))
+
+    def segment_days(self, ivs) -> list[int] | None:
+        """UTC day starts (epoch millis) of the segments overlapping the
+        intervals ``ivs``; None without a ``__bucket`` listing.  Segments
+        span an hour when any bucket has a non-zero hour, else a day
+        (Druid's default segmentGranularity); pruning happens at that span
+        before collapsing to days, so a sub-day interval over hour segments
+        keeps only the days whose segment hours it overlaps."""
+        day = 86_400_000
+        starts = [sg.start for sg in self.segments]
+        if not starts or None in starts:
+            return None
+        span = 3_600_000 if any(s % day for s in starts) else day
+        return sorted({s - s % day for s in starts
+                       if any(a < s + span and s < b for a, b in ivs)})
 
 
 def _promote(a, b):

@@ -131,7 +131,9 @@ def segment_metadata(query: dict, spark: SparkSession, catalog: Catalog) -> Data
         # SegmentMetadataQuery.java:58-67 AnalysisTypes ROLLUP / AGGREGATORS /
         # QUERYGRANULARITY — served from the ingest-spec sidecar the way the
         # reference reads them from per-segment metadata
-        meta = _read_table_meta(catalog, query["dataSource"]) or {}
+        ds = query["dataSource"]
+        tl = catalog.timeline(ds) if isinstance(ds, str) else None
+        meta = (tl.meta if tl is not None else None) or {}
         if "rollup" in analysis:
             out = out.withColumn("rollup", F.lit(meta.get("rollup")))
         if "queryGranularity" in analysis:
@@ -144,16 +146,3 @@ def segment_metadata(query: dict, spark: SparkSession, catalog: Catalog) -> Data
             out = out.withColumn("aggregators", F.lit(aggs_json))
     return out
 
-
-def _read_table_meta(catalog: Catalog, name) -> dict | None:
-    """Read the `_druid_meta.json` sidecar written by sources/ingest."""
-    import json as _json
-    import os as _os
-    if not isinstance(name, str) or name not in catalog:
-        return None
-    spec = catalog._specs[name]
-    p = _os.path.join(spec.path, "_druid_meta.json") if spec.path else None
-    if p and _os.path.exists(p):
-        with open(p) as fh:
-            return _json.load(fh)
-    return None

@@ -10,12 +10,10 @@ intervals even when no rows landed there (unless context skipEmptyBuckets).
 Empty buckets hold aggregator identity values (count → 0, sums → NULL in
 SQL-compatible mode).  We generate the bucket spine driver-side from the
 intervals (bucket count is bounded by interval/granularity, not data size —
-safe at any data scale) and left-join the aggregate onto it.  One nuance vs
-the reference: Druid additionally clips the spine to the datasource's
-EXISTING segment range (its timeline metadata is free; equivalent range
-discovery here would cost a scan), so an interval reaching past the data
-yields extra — individually correct — empty buckets; skipEmptyBuckets
-restores exact parity for such queries.
+safe at any data scale) and left-join the aggregate onto it.  Like the
+broker, the spine is condensed to the datasource's segment timeline
+(``Catalog.timeline``: the footer-statistics ``__time`` extent and the
+``__bucket`` segment days), read once per table version, not per query.
 """
 
 from __future__ import annotations
@@ -42,7 +40,9 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
     keyed = analyze_keyed_aods(query)
     if keyed is None:
         query = rewrite_sketch_query(query)
-    df = prepare_frame(query, spark, catalog)
+    from incubator_druid_spark.plans.datasource import resolve_datasource
+    src = resolve_datasource(query["dataSource"], spark, catalog)
+    df = prepare_frame(query, spark, catalog, src)
     gran = parse_granularity(query.get("granularity", "all"))
     ctx = FilterContext(df)
     if keyed is not None:
@@ -83,7 +83,7 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
         out = grouped_agg(
             df, [gran.floor(F.col(TIME_COLUMN)).alias(TIME_COLUMN)],
             aggs, folds)
-        out = _zero_fill(out, query, gran, spark, catalog)
+        out = _zero_fill(out, query, gran, spark, catalog, src)
 
     # TimeseriesQuery.CTX_TIMESTAMP_RESULT_FIELD — materialize the bucket
     # timestamp as a LONG millis result column (post-aggs may reference it;
@@ -125,12 +125,24 @@ def run(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
 
 
 def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
-               catalog) -> DataFrame:
+               catalog, src: DataFrame) -> DataFrame:
+    """Left-join the aggregate onto the bucket spine of the query
+    intervals, condensed to the datasource's segment timeline.  ``src`` is
+    the resolved, unfiltered datasource frame."""
     if query.get("context", {}).get("skipEmptyBuckets"):
         return out
     ivs = parse_intervals(query.get("intervals"))
     if not ivs:
         return out  # unbounded → cannot enumerate buckets
+    p = gran.period
+    day_or_coarser = p is not None and (p.is_calendar
+                                        or p.millis >= 86_400_000)
+    filtered = query.get("filter") is not None
+    if not filtered and day_or_coarser:
+        # no dim filter → the aggregated buckets and the segment timeline
+        # see the SAME rows, and every covered bucket of a day-or-coarser
+        # grain is already present: zero-fill is a no-op
+        return out
     spine_ms: list[int] = []
     for start, end in ivs:
         spine_ms.extend(gran.spine(start, end))
@@ -140,13 +152,11 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
     # exact timeline condensation at the OUTER edges: Druid's last segment
     # carries the data's true extent, so hour buckets of a partially-filled
     # final day don't zero-fill past maxTime (testTimeseriesQueryZeroFilling
-    # ends at 2011-04-15T00, not T23).  Parquet row-group footer statistics
-    # give the same [minTime, maxTime] driver-side with zero data read;
-    # unavailable footers (remote store, stats missing) keep the coarser
-    # partition/day coverage.
-    from incubator_druid_spark.plans.datasource import resolve_datasource
-    src0 = resolve_datasource(query["dataSource"], spark, catalog)
-    extent = _footer_time_extent(src0)
+    # ends at 2011-04-15T00, not T23).  The timeline's parquet footer
+    # statistics give the same [minTime, maxTime] driver-side with zero
+    # data read; without them the coarser day coverage stays.
+    tl = catalog.timeline(_base_table(query["dataSource"]))
+    extent = tl.extent if tl is not None else None
     if extent is not None:
         mn, mx = extent
         lo = 0
@@ -158,8 +168,6 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
         spine_ms = [m for m in spine_ms[lo:] if m <= mx]
         if not spine_ms:
             return out
-    spine = spark.createDataFrame([(m,) for m in spine_ms], "ms long") \
-        .select(F.timestamp_millis(F.col("ms")).alias(TIME_COLUMN))
     # Druid only produces buckets where SEGMENTS exist: the broker condenses
     # query intervals to the segment timeline before zero-filling, so a
     # 1970-2020 query over 2011 data returns only 2011 buckets
@@ -171,40 +179,37 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
     # filtered rows — a filter matching nothing still fills every covered
     # bucket (testTimeseriesWithNonExistentFilter) — so the segment-day set
     # (default segmentGranularity = DAY) comes from the UNFILTERED source,
-    # interval-pruned only.  Lazy broadcast semi-join keeps translate()
-    # action-free; the distinct-days set is #days-sized, the analogue of
-    # Druid's in-memory segment timeline.
-    p = gran.period
-    day_or_coarser = p is not None and (p.is_calendar
-                                        or p.millis >= 86_400_000)
-    if query.get("filter") is None:
-        # no dim filter → the aggregated buckets and the segment timeline
-        # see the SAME rows, so coverage derives from `out` without a second
-        # source scan: at day-or-coarser granularity every covered bucket is
-        # already present (zero-fill is a no-op), and for sub-day buckets
-        # the day set is the distinct days of the present buckets.
+    # interval-pruned only.
+    days = (tl.segment_days(ivs) if filtered and tl is not None
+            and "__bucket" in src.columns else None)
+    if days is not None:
+        # segment days known on the driver: prune the spine here
         if day_or_coarser:
-            return out
-        seg_days = out.select(F.date_trunc("day", F.col(TIME_COLUMN))
-                              .alias("__seg_day")).distinct()
-    else:
-        from incubator_druid_spark.plans.datasource import resolve_datasource
-        src = resolve_datasource(query["dataSource"], spark, catalog)
-        seg_days = _bucket_partition_days(src, ivs, spark)
-        if seg_days is None:
-            # non-bucketed source: fall back to a distinct-days scan of the
-            # interval-pruned source (reads only the __time column)
-            src = src.filter(interval_predicate(ivs, F.col(TIME_COLUMN)))
-            seg_days = src.select(F.date_trunc("day", F.col(TIME_COLUMN))
-                                  .alias("__seg_day")).distinct()
-    if day_or_coarser:
-        # bucket >= a day: keep buckets holding at least one segment day
-        cond = gran.floor(F.col("__seg_day")) == F.col(TIME_COLUMN)
-    else:
-        # sub-day buckets: keep those inside a segment day
-        cond = (F.date_trunc("day", F.col(TIME_COLUMN))
-                == F.col("__seg_day"))
-    spine = spine.join(F.broadcast(seg_days), cond, "left_semi")
+            # bucket >= a day: keep buckets holding at least one segment day
+            keep = {gran.spine(d, d + 1)[0] for d in days}
+            spine_ms = [m for m in spine_ms if m in keep]
+        else:
+            # sub-day buckets: keep those inside a segment day
+            keep = set(days)
+            spine_ms = [m for m in spine_ms if m - m % 86_400_000 in keep]
+    spine = spark.createDataFrame([(m,) for m in spine_ms], "ms long") \
+        .select(F.timestamp_millis(F.col("ms")).alias(TIME_COLUMN))
+    if days is None:
+        # coverage from rows: for sub-day buckets with no dim filter, the
+        # distinct days of the present buckets (no second source scan);
+        # for a filtered query over a source without a `__bucket` listing,
+        # a distinct-days scan of the interval-pruned source (reads only
+        # __time).  Lazy broadcast semi-join keeps translate() action-free.
+        rows = (src.filter(interval_predicate(ivs, F.col(TIME_COLUMN)))
+                if filtered else out)
+        seg_days = rows.select(F.date_trunc("day", F.col(TIME_COLUMN))
+                               .alias("__seg_day")).distinct()
+        if day_or_coarser:
+            cond = gran.floor(F.col("__seg_day")) == F.col(TIME_COLUMN)
+        else:
+            cond = (F.date_trunc("day", F.col(TIME_COLUMN))
+                    == F.col("__seg_day"))
+        spine = spine.join(F.broadcast(seg_days), cond, "left_semi")
     joined = F.broadcast(spine).join(out, on=TIME_COLUMN, how="left")
     # aggregator identity values for empty buckets
     fills = []
@@ -244,134 +249,12 @@ def _zero_fill(out: DataFrame, query: dict, gran, spark: SparkSession,
     return joined.select(TIME_COLUMN, *fills)
 
 
-def _footer_time_extent(src: DataFrame) -> tuple[int, int] | None:
-    """[min, max] of __time in epoch millis from parquet FOOTER row-group
-    statistics — driver-side metadata only, the analogue of reading segment
-    descriptors off Druid's timeline (DataSegment interval bounds).  Returns
-    None (caller keeps day-grain coverage) for join/union frames, non-local
-    or non-parquet storage, too many files, or absent/odd-typed stats."""
-    import datetime
-    import re
-
-    try:
-        plan = src._jdf.queryExecution().analyzed().toString()
-        if re.search(r"(?m)^\s*[:+-]*\s*(?:Join|Union)\b", plan):
-            return None
-        files = src.inputFiles()
-    except Exception:  # pragma: no cover - non-file-backed frame
-        return None
-    if not files or len(files) > 4096 or "__time" not in src.columns:
-        return None
-    # memoize per file LIST: segment files are immutable (writes create
-    # new files / new versions), so the extent of a fixed set of paths is
-    # stable — without this every granular timeseries query re-reads every
-    # footer on the driver (~ms × #files before the job starts)
-    key = tuple(sorted(files))
-    if key in _EXTENT_CACHE:
-        return _EXTENT_CACHE[key]
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover
-        return None
-    def compute():
-        utc = datetime.timezone.utc
-        mn = mx = None
-        for uri in files:
-            if not uri.startswith("file:"):
-                return None
-            path = uri[5:]
-            while path.startswith("//"):
-                path = path[1:]
-            try:
-                md = pq.ParquetFile(path).metadata
-            except Exception:
-                return None
-            idx = next((i for i in range(md.num_columns)
-                        if md.schema.column(i).name == "__time"), None)
-            if idx is None:
-                return None
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                lo, hi = st.min, st.max
-                if not isinstance(lo, datetime.datetime):
-                    return None  # e.g. raw TIMESTAMP(NANOS)-as-long storage
-                lo = lo.replace(tzinfo=lo.tzinfo or utc).timestamp() * 1000
-                hi = hi.replace(tzinfo=hi.tzinfo or utc).timestamp() * 1000
-                mn = lo if mn is None else min(mn, lo)
-                mx = hi if mx is None else max(mx, hi)
-        if mn is None:
-            return None
-        return int(mn), int(mx)
-
-    res = compute()
-    if len(_EXTENT_CACHE) > 256:  # bound driver memory on churny catalogs
-        _EXTENT_CACHE.clear()
-    _EXTENT_CACHE[key] = res
-    return res
-
-
-_EXTENT_CACHE: dict = {}
-
-
-def _bucket_partition_days(src: DataFrame, ivs, spark) -> DataFrame | None:
-    """Segment-day coverage from the `__bucket` PARTITION LISTING — file
-    metadata only, zero data read (the 100-TB analogue of Druid's in-memory
-    segment timeline in CachingClusteredClient).  Tables written by
-    sources/ingest partition by __bucket (yyyy-MM-dd'T'HH of the floored
-    segment granularity), so the directory names enumerate exactly the
-    segments that exist.  Returns a tiny driver-built (__seg_day) frame, or
-    None when the source isn't __bucket-partitioned / isn't file-backed
-    (caller falls back to a distinct-days scan)."""
-    import datetime
-    import re
-
-    if "__bucket" not in src.columns:
-        return None
-    try:
-        # a join/union-derived frame's inputFiles() mixes every input's
-        # files — coverage would be mis-attributed; only a single-relation
-        # frame's partition listing IS its segment timeline
-        plan = src._jdf.queryExecution().analyzed().toString()
-        if re.search(r"(?m)^\s*[:+-]*\s*(?:Join|Union)\b", plan):
-            return None
-        files = src.inputFiles()
-    except Exception:
-        return None
-    vals = set()
-    for f in files:
-        m = re.search(r"__bucket=([^/]+)/", f)
-        if m:
-            vals.add(m.group(1))
-    if not vals:
-        return None
-    utc = datetime.timezone.utc
-    hours = set()
-    for v in vals:
-        try:
-            hours.add(datetime.datetime.strptime(v, "%Y-%m-%dT%H")
-                      .replace(tzinfo=utc))
-        except ValueError:
-            return None  # unexpected layout — let the scan path decide
-    # segment span: hour-partitioned tables (any nonzero hour component)
-    # cover [hour, hour+1h) per value; all-midnight listings are read as
-    # DAY segments (Druid's default segmentGranularity — a day segment
-    # covers the whole day, testTimeseriesQueryZeroFilling).  Prune at the
-    # SEGMENT span against the query intervals BEFORE collapsing to days,
-    # so a sub-day interval over hour segments doesn't zero-fill a day none
-    # of whose segment hours overlap (timeline condensation,
-    # CachingClusteredClient).
-    hour_ms, day_ms = 3_600_000, 86_400_000
-    span_ms = hour_ms if any(h.hour for h in hours) else day_ms
-    days = set()
-    for h in sorted(hours):
-        ms = int(h.timestamp() * 1000)
-        if any(s < ms + span_ms and ms < e for s, e in ivs):
-            # tz-AWARE: a naive datetime would be converted through the
-            # OS-local zone by createDataFrame (time.mktime), shifting the
-            # seg-day spine off UTC on non-UTC hosts and emptying the
-            # semi-join
-            days.add(datetime.datetime(h.year, h.month, h.day, tzinfo=utc))
-    pruned = [(d,) for d in sorted(days)]
-    return spark.createDataFrame(pruned, "__seg_day timestamp")
+def _base_table(ds) -> str | None:
+    """The table whose timeline covers a datasource: the table itself, or
+    the innermost table of a query datasource.  None for join, union,
+    inline and lookup datasources, whose rows mix several inputs or none."""
+    while isinstance(ds, dict) and ds.get("type") == "query":
+        ds = ds["query"].get("dataSource")
+    if isinstance(ds, dict) and ds.get("type") in ("table", "globalTable"):
+        ds = ds.get("name")
+    return ds if isinstance(ds, str) else None

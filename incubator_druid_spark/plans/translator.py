@@ -48,9 +48,13 @@ def _legacy_null_frame(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def prepare_frame(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:
-    """dataSource → virtualColumns → intervals → filter, shared by all types."""
-    df = resolve_datasource(query["dataSource"], spark, catalog)
+def prepare_frame(query: dict, spark: SparkSession, catalog: Catalog,
+                  src: DataFrame | None = None) -> DataFrame:
+    """dataSource → virtualColumns → intervals → filter, shared by all types.
+    ``src`` is the already-resolved dataSource frame, when the caller has
+    one."""
+    df = src if src is not None else resolve_datasource(
+        query["dataSource"], spark, catalog)
 
     ctx_opts = query.get("context") or {}
     # druid.generic.useDefaultValueForNull — legacy mode replaces null with
@@ -155,21 +159,37 @@ def prepare_frame(query: dict, spark: SparkSession, catalog: Catalog) -> DataFra
         # Druid's segment-timeline pruning in CachingClusteredClient).
         if "__bucket" in df.columns:
             import datetime
-            lo_ms = min(s for s, _ in ivs)
-            hi = max(e for _, e in ivs) // 1000
-            fmt = "%Y-%m-%dT%H"
+
+            def bucket(ms):
+                return datetime.datetime.fromtimestamp(
+                    ms // 1000, tz=datetime.timezone.utc) \
+                    .strftime("%Y-%m-%dT%H")
             # the upper bound is always safe (a partition's start never
             # exceeds its rows' times); the LOWER bound must be the
             # interval start floored to the table's SEGMENT granularity —
             # the raw start would exclude the first partially-covered
             # segment (e.g. a noon start pruning away '...T00' of a
-            # day-partitioned table)
-            hi_s = datetime.datetime.fromtimestamp(
-                hi, tz=datetime.timezone.utc).strftime(fmt)
-            pred = pred & (F.col("__bucket") <= hi_s)
-            lo_s = _bucket_floor_lo(query, catalog, lo_ms)
-            if lo_s is not None:
-                pred = pred & (F.col("__bucket") >= lo_s)
+            # day-partitioned table).  That granularity comes from the
+            # ingest sidecar of a table datasource; without one, or for a
+            # tz/origin/all granularity, only the upper bound applies —
+            # weaker pruning, never wrong.
+            pred = pred & (F.col("__bucket") <= bucket(max(e for _, e in ivs)))
+            from incubator_druid_spark.model.granularity import \
+                parse_granularity
+            ds = query["dataSource"]
+            if isinstance(ds, dict) and ds.get("type") == "table":
+                ds = ds.get("name")
+            tl = catalog.timeline(ds) if isinstance(ds, str) else None
+            sg = (tl.meta or {}).get("segmentGranularity") if tl else None
+            try:
+                g = parse_granularity(sg) if isinstance(sg, str) else None
+            except ValueError:
+                g = None
+            if g is not None and g.kind == "period" and not g.tz \
+                    and g.origin_millis is None:
+                lo = min(s for s, _ in ivs)
+                pred = pred & (F.col("__bucket")
+                               >= bucket(g.spine(lo, lo + 1)[0]))
         df = df.filter(pred)
 
     flt = query.get("filter")
@@ -180,51 +200,6 @@ def prepare_frame(query: dict, spark: SparkSession, catalog: Catalog) -> DataFra
         df = flush_lookup_joins(df)  # large-lookup refs inside the predicate
         df = df.filter(pred)
     return df
-
-
-def _bucket_floor_lo(query: dict, catalog, lo_ms: int) -> str | None:
-    """Lower partition-prune bound: the interval start floored to the
-    table's SEGMENT granularity, i.e. the partition value of the segment
-    CONTAINING lo.  The granularity comes from the ingest sidecar
-    (_druid_meta.json, operators/metadata._read_table_meta); tables with
-    no sidecar, non-table datasources, or complex granularities
-    (tz/origin/all) return None and the caller keeps only the upper
-    bound — weaker pruning, never wrong."""
-    import datetime
-
-    ds = query.get("dataSource")
-    if isinstance(ds, dict) and ds.get("type") == "table":
-        ds = ds.get("name")
-    if not isinstance(ds, str):
-        return None
-    from incubator_druid_spark.operators.metadata import _read_table_meta
-    try:
-        meta = _read_table_meta(catalog, ds)
-    except Exception:
-        return None
-    sg = (meta or {}).get("segmentGranularity")
-    if not isinstance(sg, str):
-        return None
-    from incubator_druid_spark.model.granularity import parse_granularity
-    try:
-        g = parse_granularity(sg)
-    except ValueError:
-        return None
-    if g.kind != "period" or g.tz or g.origin_millis is not None:
-        return None
-    p = g.period
-    utc = datetime.timezone.utc
-    if p.is_calendar:  # mirror Granularity._floor_months (UTC, epoch-based)
-        dt = datetime.datetime.fromtimestamp(lo_ms / 1000, tz=utc)
-        mi = (dt.year - 1970) * 12 + dt.month - 1
-        fl = (mi // p.months) * p.months
-        out = datetime.datetime(1970 + fl // 12, fl % 12 + 1, 1, tzinfo=utc)
-    else:  # mirror Granularity._floor_millis (P1W → Monday anchor)
-        anchor = (-259_200_000
-                  if p.weeks and p.millis == 604_800_000 else 0)
-        ms = ((lo_ms - anchor) // p.millis) * p.millis + anchor
-        out = datetime.datetime.fromtimestamp(ms / 1000, tz=utc)
-    return out.strftime("%Y-%m-%dT%H")
 
 
 def translate(query: dict, spark: SparkSession, catalog: Catalog) -> DataFrame:

@@ -322,7 +322,7 @@ def ingest(spark: SparkSession, spec: dict, catalog: Catalog,
             .sortBy(*dims)
             .option("path", path)
             .saveAsTable(name))
-        catalog.register_managed(name)
+        catalog.register_managed(name, path)
     elif pspec.get("type") in ("single_dim", "range"):
         dims = ([pspec["partitionDimension"]]
                 if pspec.get("partitionDimension")

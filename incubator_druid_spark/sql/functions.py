@@ -440,7 +440,6 @@ def register_metadata_views(spark: SparkSession, catalog: Catalog) -> None:
     Re-entrancy guarded: resolving a registered SQL view's schema below
     calls druid_sql, and a view that itself references sys.* /
     INFORMATION_SCHEMA.* would otherwise recurse unboundedly."""
-    import os as _os
     if getattr(_SQL_CTX, "in_metadata_views", False):
         return
     _SQL_CTX.in_metadata_views = True
@@ -452,8 +451,6 @@ def register_metadata_views(spark: SparkSession, catalog: Catalog) -> None:
 
 def _register_metadata_views_inner(spark: SparkSession,
                                    catalog: Catalog) -> None:
-    import os as _os
-
     tables = [("druid", "druid", n, "TABLE") for n in catalog.names()]
     tables += [("druid", "view", v, "VIEW") for v in sorted(_SQL_VIEWS)]
     spark.createDataFrame(
@@ -477,24 +474,13 @@ def _register_metadata_views_inner(spark: SparkSession,
             dt = _druid_type(f.dataType)
             cols.append(("druid", "druid", name, f.name, i, dt,
                          "YES" if f.nullable else "NO", _jdbc_type(dt)))
-        # sys.segments: one row per time-partition directory ("segment") for
-        # ingested tables, one per file for plain parquet sources; sizes from
-        # the filesystem listing (the analogue of the coordinator's segment
-        # metadata — no data read)
-        spec = catalog._specs[name]
-        path = spec.path
-        if path and _os.path.isdir(path):
-            buckets = [d for d in sorted(_os.listdir(path))
-                       if d.startswith("__bucket=")]
-            for b in buckets or [""]:
-                full = _os.path.join(path, b) if b else path
-                size = sum(_os.path.getsize(_os.path.join(r, f))
-                           for r, _, fs in _os.walk(full) for f in fs)
-                seg_id = f"{name}_{b.removeprefix('__bucket=')}" if b else name
-                segs.append((seg_id, name, b.removeprefix("__bucket="),
-                             size, 1, 1))
-        elif path:
-            segs.append((name, name, "", _os.path.getsize(path), 1, 1))
+        # sys.segments: one row per `__bucket` segment of an ingested
+        # table, one per unpartitioned source; sizes count data files, from
+        # the table's timeline (no data read)
+        tl = catalog.timeline(name)
+        for sg in tl.segments if tl is not None else ():
+            segs.append((f"{name}_{sg.bucket}" if sg.bucket else name, name,
+                         sg.bucket, sg.size, 1, 1))
     # registered SQL views surface their resolved schemas under the `view`
     # schema (InformationSchema resolves view row types the same way)
     for vname in sorted(_SQL_VIEWS):

@@ -138,15 +138,27 @@ def test_subday_interval_over_hour_segments_no_spurious_fill(
 
 
 def test_bucket_listing_rejects_join_frames(spark, tmp_path):
-    from incubator_druid_spark.operators.timeseries import \
-        _bucket_partition_days
     cat = _mk_hour_bucketed(spark, tmp_path)
-    src = cat.table("hourly")
-    joined = src.join(src.select("typ").distinct(), on="typ")
     ivs = [(1704067200000, 1704153600000)]
-    assert _bucket_partition_days(joined, ivs, spark) is None
-    # the single-relation frame still resolves from the listing
-    assert _bucket_partition_days(src, ivs, spark) is not None
+    # the single table resolves its segment days from the listing
+    assert cat.timeline("hourly").segment_days(ivs) == [1704067200000]
+    # a join datasource has no timeline: its filtered zero-fill answers
+    # through the distinct-days scan of the joined rows
+    join = {"type": "join", "left": "hourly",
+            "right": {"type": "inline", "columnNames": ["k"],
+                      "rows": [["a"]]},
+            "rightPrefix": "j.", "condition": "typ == \"j.k\"",
+            "joinType": "INNER"}
+    q = {"queryType": "timeseries", "dataSource": join,
+         "granularity": "hour",
+         "intervals": ["2024-01-01T00:00:00Z/2024-01-02T00:00:00Z"],
+         "filter": {"type": "selector", "dimension": "typ", "value": "zzz"},
+         "aggregations": [{"type": "count", "name": "c"}]}
+    from incubator_druid_spark.operators.timeseries import _base_table
+    assert _base_table(join) is None
+    got = [(r["__time"], r["c"]) for r in translate(q, spark, cat).collect()]
+    d = datetime.datetime
+    assert got == [(d(2024, 1, 1, h), 0) for h in range(24)]
 
 
 # -- 5. JPEG BitWriter accumulator is bounded -------------------------------

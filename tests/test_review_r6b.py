@@ -18,8 +18,8 @@
    rendered in the sql timezone.
 6. numeric-ordering bound comparisons are BigDecimal-exact beyond 2^53
    (StringComparators.NUMERIC uses convertStringToBigDecimal).
-7. _footer_time_extent memoizes per file list (no per-query driver
-   re-read of immutable parquet footers).
+7. Catalog.timeline memoizes the footer extent per table version (no
+   per-query driver re-read of immutable parquet footers).
 """
 
 import datetime
@@ -211,20 +211,20 @@ def test_numeric_bound_exact_beyond_double_precision(spark):
 # -- 7. footer extent memoized ----------------------------------------------
 
 def test_footer_extent_memoized(spark, tmp_path):
-    from incubator_druid_spark.operators import timeseries as ts_mod
+    from incubator_druid_spark.catalog import Catalog
     df = spark.createDataFrame(
         [(datetime.datetime(2024, 1, 1), 1)], "__time timestamp, v long")
     p = str(tmp_path / "seg")
     df.write.mode("overwrite").parquet(p)
-    src = spark.read.parquet(p)
-    ts_mod._EXTENT_CACHE.clear()
-    first = ts_mod._footer_time_extent(src)
-    assert first is not None
-    assert len(ts_mod._EXTENT_CACHE) == 1
-    key = next(iter(ts_mod._EXTENT_CACHE))
-    # poison the cached value: a second call must serve it (no recompute)
-    ts_mod._EXTENT_CACHE[key] = (123, 456)
-    assert ts_mod._footer_time_extent(src) == (123, 456)
+    cat = Catalog(spark)
+    cat.register("seg", p)
+    tl = cat.timeline("seg")
+    assert tl.extent is not None
+    # an unchanged table keeps its timeline object; poison the memoized
+    # extent: a second lookup must serve it (no footer re-read)
+    assert cat.timeline("seg") is tl
+    tl.extent = (123, 456)
+    assert cat.timeline("seg").extent == (123, 456)
 
 
 # -- catalog staleness: external write into an existing partition dir -------
